@@ -274,14 +274,20 @@ object Relational {
     * previous run's cache (the bench discipline: no caching across
     * runs). Guide §2.4 (remove duplicated subtrees) + §5 (unpersist
     * when done). */
-  private def selectPercentilesMulti(df: DataFrame, grp: String,
+  private[graft] def selectPercentilesMulti(df: DataFrame, grp: String,
       cols: Seq[(String, Seq[(Double, String)])]): DataFrame = {
     val buckets = 1024
     val vs = cols.map(_._1)
-    require(vs.map(df.schema(_).dataType).distinct.size == 1,
-      "selectPercentilesMulti value columns must share one type " +
-        "(the long-form value column is untyped-union'd)")
-    val in = df.select((col(grp) +: vs.map(col)): _*)
+    // the long-form value column (and each column's vmin/vmax, which
+    // ride one exploded struct array) needs ONE type: mixed value
+    // columns cast to their wider common type (int + double → double)
+    val types = vs.map(df.schema(_).dataType).distinct
+    val common = org.apache.spark.sql.catalyst.analysis.TypeCoercion
+      .findWiderCommonType(types).getOrElse(throw new
+        IllegalArgumentException("selectPercentilesMulti value " +
+          s"columns have no common type: ${types.mkString(", ")}"))
+    val in = df.select((col(grp) +: vs.map(v =>
+      col(v).cast(common).as(v))): _*)
     // per-(group, column) stats in ONE aggregate (count skips nulls,
     // matching the old per-column isNotNull filter)
     val statAggs = vs.flatMap(v => Seq(

@@ -1043,13 +1043,10 @@ object Similarity {
     // (guide §2.6). The shortlist scales to the CORPUS (same contract
     // as pqTopK); the index row count is a parquet-footer count, not
     // a scan.
-    val Seq(probedAny, shortAny) =
-      graft.tools.Overlap.concurrently[Any](
-        () => qCells.select(col("cell")).distinct()
-          .collect().map(_.getLong(0)),
-        () => pqShortlist(Versioned.read(s, indexDir).count()))
-    val probed = probedAny.asInstanceOf[Array[Long]]
-    val short = shortAny.asInstanceOf[Int]
+    val (probed, short) = graft.tools.Overlap.concurrently2(
+      () => qCells.select(col("cell")).distinct()
+        .collect().map(_.getLong(0)),
+      () => pqShortlist(Versioned.read(s, indexDir).count()))
     require(probed.forall(_.isValidInt),
       s"IVF cell id beyond Int range: ${probed.max}")
     val idx = Versioned.read(s, indexDir)
@@ -1658,22 +1655,18 @@ object Similarity {
     // reads of the same published state — overlap them (guide §2.6);
     // the probe's two facts (twin gone, row count) fold into ONE
     // aggregate action (the cache + isEmpty + count trio was three)
-    val Seq(refusedAny, tombAny) = graft.tools.Overlap.concurrently[Any](
+    val (refused, tombRow) = graft.tools.Overlap.concurrently2(
       () => scala.util.Try(exportVectorIndex(s, idx)).isFailure,
       () => probe().agg(count(lit(1)),
         coalesce(sum(when(col("neighbor_id") === 3000000L, 1L)
           .otherwise(0L)), lit(0L)))
         .head())
-    val refused = refusedAny.asInstanceOf[Boolean]
-    val tombRow = tombAny.asInstanceOf[org.apache.spark.sql.Row]
     val goneTomb = tombRow.getLong(1) == 0L
     val rows = tombRow.getLong(0)
     compactIvfPqIndex(s, idx)
-    val Seq(okAny, compactAny) = graft.tools.Overlap.concurrently[Any](
+    val (exportOk, goneCompact) = graft.tools.Overlap.concurrently2(
       () => scala.util.Try(exportVectorIndex(s, idx)).isSuccess,
       () => probe().filter(col("neighbor_id") === 3000000L).isEmpty)
-    val exportOk = okAny.asInstanceOf[Boolean]
-    val goneCompact = compactAny.asInstanceOf[Boolean]
     Seq((if (foundBefore) 1L else 0L, if (goneTomb) 1L else 0L,
         if (refused) 1L else 0L, if (exportOk) 1L else 0L,
         if (goneCompact) 1L else 0L, rows))

@@ -733,19 +733,13 @@ object DerivedTable {
     graft.tools.Overlap.concurrently(thunks: _*)
 
   /** Row-for-row BAG equality (duplicates counted) in ONE shuffle:
-    * signed-union the two frames (+1/-1 weights) and check every
-    * group's weight sum is zero — the same pass the delta maintenance
-    * uses, replacing the gates' former two-direction `exceptAll`
-    * (four scans, two shuffles) with one aggregation. Null values
-    * group natively, so null-keyed rows compare correctly. */
-  def bagEqual(a: DataFrame, b: DataFrame): Boolean = {
-    val cols = a.columns.toSeq
-    a.withColumn("__w", lit(1L))
-      .unionByName(b.select(cols.map(col): _*)
-        .withColumn("__w", lit(-1L)))
-      .groupBy(cols.map(col): _*).agg(sum(col("__w")).as("__d"))
-      .filter(col("__d") =!= 0L).isEmpty
-  }
+    * the two frames' signed difference ([[Versioned.signedNet]], the
+    * same pass [[Versioned.readChanges]] nets rewrites with) is empty
+    * — replacing the gates' former two-direction `exceptAll` (four
+    * scans, two shuffles) with one aggregation. Null values group
+    * natively, so null-keyed rows compare correctly. */
+  def bagEqual(a: DataFrame, b: DataFrame): Boolean =
+    Versioned.signedNet(a, b).isEmpty
 
   /** Above this many point values the readWhereIn pruning expression
     * grows codegen-hostile AND its selectivity collapses (most files
@@ -896,7 +890,8 @@ object DerivedTable {
     * one point-read of dim-affected fact rows keyed on `fkCol`, one
     * point-read of re-derived fact rows keyed on `key`, one
     * slice-vs-dim join (Catalyst broadcasts the dim when it is small
-    * — the common star-schema case), one CoW/MoR commit. Nothing
+    * — the common star-schema case) evaluated once and persisted
+    * for the apply's actions, one CoW/MoR commit. Nothing
     * scales with either table's total size; `maxTouchedKeys` bounds
     * the refresh like [[refreshAgg]]. Returns the processed
     * ((factFrom, factTo), (dimFrom, dimTo)). */
@@ -951,7 +946,9 @@ object DerivedTable {
     * dim-key refusals, the touched-key bound. Scale shape: one
     * changelog read per source, one affected-fact point read per
     * CHANGED dim leg (an idle leg costs two metadata probes), one
-    * slice-vs-dims join, one CoW/MoR commit. */
+    * slice-vs-dims join evaluated ONCE (persisted across the apply's
+    * preflight, provenance probe, rewrite and tombstone write), one
+    * CoW/MoR commit. */
   def refreshJoinStar(s: SparkSession, factDir: String,
       dims: Seq[JoinDim], dstDir: String, key: String,
       transform: (DataFrame, Seq[DataFrame]) => DataFrame,
@@ -984,15 +981,22 @@ object DerivedTable {
       } else {
         val factSlice = pointRead(s, factDir, Seq(key), nK,
           kProbe.map(_.get(0)).toSeq, Some(to1), kDf)
+        // persisted around the apply like [[refresh]]'s `last`: the
+        // preflight, the provenance probe, the rewrite and the
+        // tombstone write each consume the slice, and would otherwise
+        // re-run the fact point read and the dim join per action
         val newRows = transform(factSlice, dims.indices.map(dimAt))
-        require(newRows.columns.contains(key),
-          s"the join-view query must preserve the key column '$key'")
-        val dels = kDf.join(newRows.select(col(key)), Seq(key),
-          "left_anti")
-        Versioned.applyChanges(s, dstDir, upserts = newRows,
-          deleteKeys = dels, key = key,
-          transform = layoutOf(partitionCol),
-          statsCols = Seq(key), note = Some(note))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          require(newRows.columns.contains(key),
+            s"the join-view query must preserve the key column '$key'")
+          val dels = kDf.join(newRows.select(col(key)), Seq(key),
+            "left_anti")
+          Versioned.applyChanges(s, dstDir, upserts = newRows,
+            deleteKeys = dels, key = key,
+            transform = layoutOf(partitionCol),
+            statsCols = Seq(key), note = Some(note))
+        } finally newRows.unpersist(blocking = false)
       }
     }
     ((from1, to1), froms.zip(tos))
@@ -2387,11 +2391,8 @@ object DerivedTable {
       .select(col("t")).distinct().collect().map(_.getString(0)).toSet
     // the two verification collects are independent reads of the same
     // published states — overlap them (guide §2.6)
-    val Seq(statsAny, badAny) = concurrently[Any](
+    val (stats, badLegs) = graft.tools.Overlap.concurrently2(
       () => statsJob(), () => badLegsJob())
-    val stats = statsAny
-      .asInstanceOf[Map[String, org.apache.spark.sql.Row]]
-    val badLegs = badAny.asInstanceOf[Set[String]]
     import s.implicits._
     Seq((stats("f").getLong(1), stats("f").getLong(2),
         stats("m").getLong(1), stats("m").getLong(2),
@@ -2527,11 +2528,8 @@ object DerivedTable {
       .select(col("t")).distinct().collect().map(_.getString(0)).toSet
     // the two verification collects are independent reads of the same
     // published states — overlap them (guide §2.6)
-    val Seq(statsAny, badAny) = concurrently[Any](
+    val (stats, badLegs) = graft.tools.Overlap.concurrently2(
       () => statsJob(), () => badLegsJob())
-    val stats = statsAny
-      .asInstanceOf[Map[String, org.apache.spark.sql.Row]]
-    val badLegs = badAny.asInstanceOf[Set[String]]
     Seq((if (created.getString(0) == "join") 1L else 0L,
         stats("v1").getLong(1), stats("v2").getLong(1),
         stats("v3").getLong(1), stats("v3").getLong(2),

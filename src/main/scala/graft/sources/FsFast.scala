@@ -57,14 +57,26 @@ private[graft] object FsFast {
     * disagree (an unfiltered caller would over-count or leak `.crc`
     * paths into a manifest). Dot-DIRECTORIES are not pruned: Hadoop's
     * hidden-path convention is a reader-side filter, and protocol
-    * callers walk inside `.stage-*` dirs deliberately. */
-  def walkFiles(f: FileSystem, dir: Path): Seq[Entry] =
+    * callers walk inside `.stage-*` dirs deliberately.
+    *
+    * `skipDir` prunes subtrees: it sees each directory's path relative
+    * to `dir` (`a`, `a/b`), and a `true` drops everything below it.
+    * The local arm never descends into a pruned directory, so files a
+    * concurrent writer creates and renames away there cannot fail the
+    * walk; the remote arm lists recursively and filters. */
+  def walkFiles(f: FileSystem, dir: Path,
+      skipDir: String => Boolean = _ => false): Seq[Entry] =
     localPath(f, dir) match {
       case Some(root) =>
         if (!Files.exists(root))
           throw new java.io.FileNotFoundException(dir.toString)
         val buf = scala.collection.mutable.ArrayBuffer.empty[Entry]
         Files.walkFileTree(root, new SimpleFileVisitor[NioPath] {
+          override def preVisitDirectory(d: NioPath,
+              attrs: BasicFileAttributes): FileVisitResult =
+            if (d != root && skipDir(root.relativize(d).toString))
+              FileVisitResult.SKIP_SUBTREE
+            else FileVisitResult.CONTINUE
           override def visitFile(file: NioPath,
               attrs: BasicFileAttributes): FileVisitResult = {
             val name = file.getFileName.toString
@@ -80,13 +92,20 @@ private[graft] object FsFast {
         })
         buf.toSeq
       case None =>
+        val base = f.makeQualified(dir).toUri.getPath.stripSuffix("/")
+        def pruned(p: Path): Boolean = {
+          val rel = p.getParent.toUri.getPath.stripPrefix(base)
+            .stripPrefix("/").split("/").filter(_.nonEmpty)
+          rel.indices.exists(i => skipDir(rel.take(i + 1).mkString("/")))
+        }
         val it = f.listFiles(dir, /*recursive=*/ true)
         val buf = scala.collection.mutable.ArrayBuffer.empty[Entry]
         while (it.hasNext) {
           val st = it.next()
           val p = st.getPath
-          buf += Entry(p, p.getName, p.getParent.getName, st.getLen,
-            st.getModificationTime)
+          if (!pruned(p))
+            buf += Entry(p, p.getName, p.getParent.getName, st.getLen,
+              st.getModificationTime)
         }
         buf.toSeq
     }

@@ -824,181 +824,195 @@ object Versioned {
         }))
         pool.shutdown()
       }
-    if (populate.isDefined) {
-      // an IMPORT commit: the caller stages pre-existing parquet files
-      // itself (hardlink/copy — no Spark write, no rewrite); counts
-      // come from the foreign files' own footers, the one place the
-      // footer pool is the right tool on the commit path
-      f.mkdirs(stage)
-      populate.get(stage)
-      require(containsParquet(f, stage),
-        s"import staged no parquet files at $stage")
-      if (statsCols.nonEmpty) writeStats(spark, f, stage, statsCols)
-      else writeCountStats(spark, f, stage)
-    } else if (writeData) {
-      // Parquet bloom filters and the declared write order are TABLE
-      // PROPERTIES consumed AT WRITE TIME (Iceberg's
-      // write.parquet.bloom-filter-enabled.column.<col> /
-      // write.sort-order spellings): every data file written while
-      // they are set carries footer blooms for the named columns —
-      // evaluated EXECUTOR-side by parquet's row-group filtering on
-      // =/IN probes, the point-lookup complement to min/max pruning
-      // for high-cardinality keys whose ranges overlap every file —
-      // and is internally sorted by the declared order. An explicit
-      // `props` (CREATE … TBLPROPERTIES) wins; otherwise the table's
-      // current map applies. `declaredOrder = false` lets an explicit
-      // clustering strategy (z-order) opt out of the sort.
-      val effWrite = props.orElse {
-        if (head >= 1) Some(properties(spark, tableDir)) else None
-      }.getOrElse(Map.empty)
-      val distributed = applyDistribution(effWrite, data, partBy)
-      val ordered =
-        if (declaredOrder)
-          applyWriteOrderFrom(effWrite, distributed, partBy)
-        else distributed
-      val w = ordered.write.mode("overwrite")
-        .options(bloomWriteOptions(effWrite) ++
-          compressionOptions(effWrite))
-      val taskRows = harvestWriteCounts(spark) {
-        partBy.fold(w)(c => w.partitionBy(c)).parquet(stage.toString)
-      }
-      // A partitionBy write of an EMPTY frame emits ZERO parquet files
-      // — a schema-less scan root that would brick every later read.
-      // Fall back to a schema-bearing unpartitioned empty write (the
-      // plain CREATE TABLE shape); the _tspec sidecar below still
-      // records the declared spec, which is vacuously true of zero
-      // files and is what later commits INHERIT — this is exactly how
-      // `CREATE TABLE … PARTITIONED BY` publishes its default spec
-      // before any data exists.
-      val allTaskRows =
-        if (partBy.nonEmpty && !containsParquet(f, stage)) {
-          f.delete(stage, true)
-          harvestWriteCounts(spark) {
-            df.limit(0).write.mode("overwrite").parquet(stage.toString)
-          }
-        } else taskRows
-      // the tombstone writes overlap the driver-side stats/sidecar
-      // work below (guide §2.6) — started strictly AFTER the
-      // empty-partitionBy fallback above (which deletes and recreates
-      // the whole stage), awaited before the manifest references them
-      startTombstoneWrites()
-      if (statsCols.nonEmpty) writeStats(spark, f, stage, statsCols)
-      else writeCountStats(spark, f, stage, allTaskRows)
-      // emptiness decides manifest membership below only when the
-      // caller opted in; a zero task-metrics sum is re-verified
-      // against the staged footers (driver-side, rare path) so a
-      // listener hiccup can never drop a data-bearing dir
-      if (dropOwnDirIfEmpty && allTaskRows.valuesIterator.sum == 0L)
-        wroteRows = stagedDataFiles(f, stage).exists(p =>
-          FsFast.footerRowCount(f,
-            spark.sessionState.newHadoopConf(), new Path(p)) > 0L)
-    } else f.mkdirs(stage) // metadata-only commit (rollback, tombstone)
-    // The manifest this commit will publish (sans own dir) — assembled
-    // HERE so property carry-forward below can reason about
-    // reachability; linking chains the base's RAW lines: its
-    // tombstones still apply to the data entries they cover.
-    val linked = linkEntries
-      .orElse(linkBase.map(b => manifestLines(f, tableDir, b)))
-      .getOrElse(Nil)
-    // Table properties ride the manifest walk ([[properties]] consults
-    // LINKED roots), so any commit whose new manifest no longer
-    // references a _props-bearing root must CARRY the current map
-    // forward or it would silently erase the table's properties
-    // (Iceberg properties survive rewrite_data_files). That is decided
-    // by REACHABILITY, not commit shape: a full commit links nothing; a
-    // compact/merge links only SURVIVING entries, which may exclude (or
-    // be empty of) the root that carried _props — e.g. a binpack that
-    // rewrites every base file of a table whose properties configured
-    // that very binpack. An explicit `props` (SET/UNSET, CREATE OR
-    // REPLACE's declared set — possibly empty, which RESETS) always
-    // wins.
-    val effProps = props.orElse {
-      // linkBase appends chain the head's FULL manifest — reachability
-      // is preserved by construction, skip the probe on the hot path.
-      // But ONLY when no linkEntries override it: a binpack passes
-      // linkBase (its race base) AND linkEntries (the surviving
-      // subset), and the SUBSET is what the manifest references — it
-      // must take the reachability probe, or a pack that rewrites
-      // every props-bearing root erases the table's properties
-      // (regression-tested in ProcedureSpec).
-      if (linkBase.isDefined && linkEntries.isEmpty) None
-      else {
-        val propsReachable = linked.filterNot(isDeleteLine)
-          .map(_.split("/").head).distinct.exists(vr =>
-            f.exists(new Path(new Path(tableDir, vr), PropsFile)))
-        if (propsReachable) None
-        else Some(properties(spark, tableDir)).filter(_.nonEmpty)
-      }
+    // From the tombstone writes' start to their await, a failure must
+    // not unwind past a Spark job still writing into the stage: cancel
+    // its job group, await it, then drop the unpublished stage
+    def abortTombstoneWrites(): Unit = tombWrite.foreach { fut =>
+      spark.sparkContext.cancelJobGroup(s"graft-tombstones-$uuid")
+      Try(fut.get())
     }
-    effProps.foreach { m =>
-      // full-map snapshot (last-writer-wins): the newest linked root
-      // carrying a _props sidecar IS the table's property state
-      def enc(x: String) = java.net.URLEncoder.encode(x, "UTF-8")
-      FsFast.put(f, new Path(stage, PropsFile),
-        m.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${enc(k)}\t${enc(v)}" }
-          .mkString("\n").getBytes("UTF-8"), overwrite = false)
-    }
-    if (clearSpec) {
-      // [[setSpec]]'s explicit clear: the sentinel stops
-      // currentTransform's inheritance walk at this version
-      FsFast.put(f, new Path(stage, TspecFile),
-        TspecNone.getBytes("UTF-8"), overwrite = false)
-    } else if (!(dropOwnDirIfEmpty && !wroteRows))
-      // an all-deleted rewrite records no spec decision — exactly the
-      // old mergeFiles behavior (it passed transform = None then)
-      transform.foreach(t => writeTspec(f, stage, t,
-        df.schema(t.source).dataType.catalogString,
-        spark.sessionState.conf.sessionLocalTimeZone))
-    // branch + parent + generation sidecar, riding the atomic claim:
-    // head lookups and fast-forward ancestry walks read it
-    // ([[refInfo]]); the generation ties the commit to the CURRENT
-    // incarnation of its branch so a later drop-and-recreate of the
-    // name cannot adopt it ([[branchHeadIn]]'s fence)
-    val targetGen =
-      if (!branched) 0L
-      else refEntriesFrom(rootSt, BranchPrefix)
-        .filter(_._1 == targetBranch) match {
-          case Nil => 0L
-          case pins => resolveRef(pins)._4
+    val (linked, targetGen) = try {
+      if (populate.isDefined) {
+        // an IMPORT commit: the caller stages pre-existing parquet files
+        // itself (hardlink/copy — no Spark write, no rewrite); counts
+        // come from the foreign files' own footers, the one place the
+        // footer pool is the right tool on the commit path
+        f.mkdirs(stage)
+        populate.get(stage)
+        require(containsParquet(f, stage),
+          s"import staged no parquet files at $stage")
+        if (statsCols.nonEmpty) writeStats(spark, f, stage, statsCols)
+        else writeCountStats(spark, f, stage)
+      } else if (writeData) {
+        // Parquet bloom filters and the declared write order are TABLE
+        // PROPERTIES consumed AT WRITE TIME (Iceberg's
+        // write.parquet.bloom-filter-enabled.column.<col> /
+        // write.sort-order spellings): every data file written while
+        // they are set carries footer blooms for the named columns —
+        // evaluated EXECUTOR-side by parquet's row-group filtering on
+        // =/IN probes, the point-lookup complement to min/max pruning
+        // for high-cardinality keys whose ranges overlap every file —
+        // and is internally sorted by the declared order. An explicit
+        // `props` (CREATE … TBLPROPERTIES) wins; otherwise the table's
+        // current map applies. `declaredOrder = false` lets an explicit
+        // clustering strategy (z-order) opt out of the sort.
+        val effWrite = props.orElse {
+          if (head >= 1) Some(properties(spark, tableDir)) else None
+        }.getOrElse(Map.empty)
+        val distributed = applyDistribution(effWrite, data, partBy)
+        val ordered =
+          if (declaredOrder)
+            applyWriteOrderFrom(effWrite, distributed, partBy)
+          else distributed
+        val w = ordered.write.mode("overwrite")
+          .options(bloomWriteOptions(effWrite) ++
+            compressionOptions(effWrite))
+        val taskRows = harvestWriteCounts(spark) {
+          partBy.fold(w)(c => w.partitionBy(c)).parquet(stage.toString)
         }
-    // commit TIMESTAMP, 4th ref field: monotone PER TABLE by
-    // construction (max of the parent commit's stamp and now — a
-    // clock step backwards can't reorder history), so wall-clock
-    // staleness (`graft.mv.staleness_seconds`, time-spelled bounds)
-    // has a sound unit. Filesystem mtimes would not be: copies and
-    // restores rewrite them silently; this stamp rides the immutable
-    // ref sidecar instead. Older 3-field refs parse fine everywhere
-    // (readers ignore extra fields / missing stamps degrade).
-    val commitTs = math.max(System.currentTimeMillis(),
-      if (head >= 1) commitTimestampIn(f, tableDir, head)
-        .getOrElse(0L) else 0L)
-    FsFast.put(f, new Path(stage, RefFile),
-      s"$targetBranch\t$head\t$targetGen\t$commitTs"
-        .getBytes("UTF-8"),
-      overwrite = false)
-    // schema-step sidecar ([[renameColumn]]/[[addColumn]]/
-    // [[dropColumn]]): the chain step readers compose
-    schemaStep.foreach { step =>
-      val (file, payload) = step match {
-        case RenameStep(_, from, to) => (RenameFile, s"$from\t$to")
-        case AddStep(_, n, dt) => (AddColFile, s"$n\t${dt.catalogString}")
-        case DropStep(_, n) => (DropColFile, n)
-        case RetypeStep(_, n, dt) =>
-          (RetypeFile, s"$n\t${dt.catalogString}")
+        // A partitionBy write of an EMPTY frame emits ZERO parquet files
+        // — a schema-less scan root that would brick every later read.
+        // Fall back to a schema-bearing unpartitioned empty write (the
+        // plain CREATE TABLE shape); the _tspec sidecar below still
+        // records the declared spec, which is vacuously true of zero
+        // files and is what later commits INHERIT — this is exactly how
+        // `CREATE TABLE … PARTITIONED BY` publishes its default spec
+        // before any data exists.
+        val allTaskRows =
+          if (partBy.nonEmpty && !containsParquet(f, stage)) {
+            f.delete(stage, true)
+            harvestWriteCounts(spark) {
+              df.limit(0).write.mode("overwrite").parquet(stage.toString)
+            }
+          } else taskRows
+        // the tombstone writes overlap the driver-side stats/sidecar
+        // work below (guide §2.6) — started strictly AFTER the
+        // empty-partitionBy fallback above (which deletes and recreates
+        // the whole stage), awaited before the manifest references them
+        startTombstoneWrites()
+        if (statsCols.nonEmpty) writeStats(spark, f, stage, statsCols)
+        else writeCountStats(spark, f, stage, allTaskRows)
+        // emptiness decides manifest membership below only when the
+        // caller opted in; a zero task-metrics sum is re-verified
+        // against the staged footers (driver-side, rare path) so a
+        // listener hiccup can never drop a data-bearing dir
+        if (dropOwnDirIfEmpty && allTaskRows.valuesIterator.sum == 0L)
+          wroteRows = stagedDataFiles(f, stage).exists(p =>
+            FsFast.footerRowCount(f,
+              spark.sessionState.newHadoopConf(), new Path(p)) > 0L)
+      } else f.mkdirs(stage) // metadata-only commit (rollback, tombstone)
+      // The manifest this commit will publish (sans own dir) — assembled
+      // HERE so property carry-forward below can reason about
+      // reachability; linking chains the base's RAW lines: its
+      // tombstones still apply to the data entries they cover.
+      val linked0 = linkEntries
+        .orElse(linkBase.map(b => manifestLines(f, tableDir, b)))
+        .getOrElse(Nil)
+      // Table properties ride the manifest walk ([[properties]] consults
+      // LINKED roots), so any commit whose new manifest no longer
+      // references a _props-bearing root must CARRY the current map
+      // forward or it would silently erase the table's properties
+      // (Iceberg properties survive rewrite_data_files). That is decided
+      // by REACHABILITY, not commit shape: a full commit links nothing; a
+      // compact/merge links only SURVIVING entries, which may exclude (or
+      // be empty of) the root that carried _props — e.g. a binpack that
+      // rewrites every base file of a table whose properties configured
+      // that very binpack. An explicit `props` (SET/UNSET, CREATE OR
+      // REPLACE's declared set — possibly empty, which RESETS) always
+      // wins.
+      val effProps = props.orElse {
+        // linkBase appends chain the head's FULL manifest — reachability
+        // is preserved by construction, skip the probe on the hot path.
+        // But ONLY when no linkEntries override it: a binpack passes
+        // linkBase (its race base) AND linkEntries (the surviving
+        // subset), and the SUBSET is what the manifest references — it
+        // must take the reachability probe, or a pack that rewrites
+        // every props-bearing root erases the table's properties
+        // (regression-tested in ProcedureSpec).
+        if (linkBase.isDefined && linkEntries.isEmpty) None
+        else {
+          val propsReachable = linked0.filterNot(isDeleteLine)
+            .map(_.split("/").head).distinct.exists(vr =>
+              f.exists(new Path(new Path(tableDir, vr), PropsFile)))
+          if (propsReachable) None
+          else Some(properties(spark, tableDir)).filter(_.nonEmpty)
+        }
       }
-      FsFast.put(f, new Path(stage, file),
-        payload.getBytes("UTF-8"), overwrite = false)
-    }
-    // tombstone sets land before the manifest references them: await
-    // the overlapped write (rethrowing its failure), or write
-    // sequentially on the paths that never started one
-    tombWrite match {
-      case Some(fut) =>
-        try fut.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
-      case None => writeTombstones()
+      effProps.foreach { m =>
+        // full-map snapshot (last-writer-wins): the newest linked root
+        // carrying a _props sidecar IS the table's property state
+        def enc(x: String) = java.net.URLEncoder.encode(x, "UTF-8")
+        FsFast.put(f, new Path(stage, PropsFile),
+          m.toSeq.sortBy(_._1)
+            .map { case (k, v) => s"${enc(k)}\t${enc(v)}" }
+            .mkString("\n").getBytes("UTF-8"), overwrite = false)
+      }
+      if (clearSpec) {
+        // [[setSpec]]'s explicit clear: the sentinel stops
+        // currentTransform's inheritance walk at this version
+        FsFast.put(f, new Path(stage, TspecFile),
+          TspecNone.getBytes("UTF-8"), overwrite = false)
+      } else if (!(dropOwnDirIfEmpty && !wroteRows))
+        // an all-deleted rewrite records no spec decision — exactly the
+        // old mergeFiles behavior (it passed transform = None then)
+        transform.foreach(t => writeTspec(f, stage, t,
+          df.schema(t.source).dataType.catalogString,
+          spark.sessionState.conf.sessionLocalTimeZone))
+      // branch + parent + generation sidecar, riding the atomic claim:
+      // head lookups and fast-forward ancestry walks read it
+      // ([[refInfo]]); the generation ties the commit to the CURRENT
+      // incarnation of its branch so a later drop-and-recreate of the
+      // name cannot adopt it ([[branchHeadIn]]'s fence)
+      val targetGen =
+        if (!branched) 0L
+        else refEntriesFrom(rootSt, BranchPrefix)
+          .filter(_._1 == targetBranch) match {
+            case Nil => 0L
+            case pins => resolveRef(pins)._4
+          }
+      // commit TIMESTAMP, 4th ref field: monotone PER TABLE by
+      // construction (max of the parent commit's stamp and now — a
+      // clock step backwards can't reorder history), so wall-clock
+      // staleness (`graft.mv.staleness_seconds`, time-spelled bounds)
+      // has a sound unit. Filesystem mtimes would not be: copies and
+      // restores rewrite them silently; this stamp rides the immutable
+      // ref sidecar instead. Older 3-field refs parse fine everywhere
+      // (readers ignore extra fields / missing stamps degrade).
+      val commitTs = math.max(System.currentTimeMillis(),
+        if (head >= 1) commitTimestampIn(f, tableDir, head)
+          .getOrElse(0L) else 0L)
+      FsFast.put(f, new Path(stage, RefFile),
+        s"$targetBranch\t$head\t$targetGen\t$commitTs"
+          .getBytes("UTF-8"),
+        overwrite = false)
+      // schema-step sidecar ([[renameColumn]]/[[addColumn]]/
+      // [[dropColumn]]): the chain step readers compose
+      schemaStep.foreach { step =>
+        val (file, payload) = step match {
+          case RenameStep(_, from, to) => (RenameFile, s"$from\t$to")
+          case AddStep(_, n, dt) => (AddColFile, s"$n\t${dt.catalogString}")
+          case DropStep(_, n) => (DropColFile, n)
+          case RetypeStep(_, n, dt) =>
+            (RetypeFile, s"$n\t${dt.catalogString}")
+        }
+        FsFast.put(f, new Path(stage, file),
+          payload.getBytes("UTF-8"), overwrite = false)
+      }
+      // tombstone sets land before the manifest references them: await
+      // the overlapped write (rethrowing its failure), or write
+      // sequentially on the paths that never started one
+      tombWrite match {
+        case Some(fut) =>
+          try fut.get()
+          catch { case e: java.util.concurrent.ExecutionException =>
+            throw e.getCause }
+        case None => writeTombstones()
+      }
+      (linked0, targetGen)
+    } catch { case e: Throwable =>
+      abortTombstoneWrites()
+      Try(f.delete(stage, true))
+      throw e
     }
     // a zero-row rewrite's own dir (an empty schema-bearing file)
     // stays OUT of the manifest unless nothing else would be in it —
@@ -1460,6 +1474,25 @@ object Versioned {
       .filter { case (v, _) => !retained.contains(v) }
   }
 
+  /** The net-weight column [[signedNet]] emits. */
+  private val NetCol = "__net"
+
+  /** Signed bag difference of two frames with the same columns, in ONE
+    * shuffle: `a`'s rows weigh +1, `b`'s -1, grouped by every column,
+    * keeping the groups whose net weight [[NetCol]] is nonzero — n > 0
+    * means `a` holds n more copies of the row, n < 0 that `b` holds -n
+    * more. Nulls group natively, the same row equality `exceptAll`
+    * uses; an empty result means the two frames are equal as bags.
+    * The one signed-union core behind [[readChanges]]' rewrite netting
+    * and [[DerivedTable.bagEqual]]. */
+  private[sources] def signedNet(a: DataFrame, b: DataFrame): DataFrame = {
+    val cols = a.columns.toSeq.map(col)
+    a.withColumn(NetCol, lit(1L))
+      .unionByName(b.select(cols: _*).withColumn(NetCol, lit(-1L)))
+      .groupBy(cols: _*).agg(sum(col(NetCol)).as(NetCol))
+      .filter(col(NetCol) =!= 0L)
+  }
+
   /** Names of [[readChanges]]' two metadata columns. */
   val ChangeTypeCol = "_change_type"
   val CommitVersionCol = "_commit_version"
@@ -1477,9 +1510,13 @@ object Versioned {
     * Per commit, events come from three delta channels:
     *   - data files ADDED net of REMOVED (append, CoW merge, full
     *     replace, rollback): live rows of each side — prior tombstones
-    *     applied, so rows already dead never re-report — netted with
-    *     `exceptAll`, which cancels the carried rows a file rewrite
-    *     merely re-homes (a [[compact]] commit nets to ZERO events);
+    *     applied, so rows already dead never re-report — netted in
+    *     ONE signed aggregate ([[signedNet]]: added rows +1, removed
+    *     rows -1, grouped by every column), which cancels the carried
+    *     rows a file rewrite merely re-homes (a [[compact]] commit
+    *     nets to ZERO events) and emits |n| copies of each row whose
+    *     net weight n is nonzero — the bag difference in both
+    *     directions from one shuffle;
     *   - a new EQUALITY tombstone ([[deleteRows]]) emits its key rows
     *     as `delete` events — KEY columns only, other columns null,
     *     Iceberg's equality-delete contract (the file asserts key
@@ -1564,15 +1601,28 @@ object Versioned {
           liveRows((prevFiles -- curFiles).toSeq.sorted, tombsAt(p))
         val addLive =
           liveRows((curFiles -- prevFiles).toSeq.sorted, tombsAt(v))
+        def tagged(d: DataFrame, tp: String) = d
+          .withColumn(ChangeTypeCol, lit(tp))
+          .withColumn(CommitVersionCol, lit(v))
         // net the carried rows a rewrite re-homes — only when the two
         // sides share columns (a full replace that changed the schema
-        // has nothing to net: every row genuinely changed)
-        val (ins, del) = (addLive, remLive) match {
+        // has nothing to net: every row genuinely changed). ONE signed
+        // aggregate nets both directions: a row's net weight n says
+        // the rewrite added n copies (n > 0, inserts) or removed -n
+        // (n < 0, deletes), and each side emits |n| copies
+        val rewriteEvents = (addLive, remLive) match {
           case (Some(a), Some(r))
               if a.columns.sorted.sameElements(r.columns.sorted) =>
-            val rAligned = r.select(a.columns.map(col).toSeq: _*)
-            (Some(a.exceptAll(rAligned)), Some(rAligned.exceptAll(a)))
-          case other => other
+            val n = col(NetCol)
+            Seq(signedNet(a, r)
+              .withColumn(ChangeTypeCol,
+                when(n > 0L, lit("insert")).otherwise(lit("delete")))
+              .withColumn(CommitVersionCol, lit(v))
+              .withColumn(NetCol, explode(sequence(lit(1L), abs(n))))
+              .drop(NetCol))
+          case (ins, del) =>
+            ins.map(tagged(_, "insert")).toSeq ++
+              del.map(tagged(_, "delete"))
         }
         val tombEvents = curLines.filter(isDeleteLine)
           .filterNot(prevLines.contains).map { line =>
@@ -1604,11 +1654,7 @@ object Versioned {
                 .drop("__dfile", "__dpos"))
             } else applyRenames(frame, chain, v)
           }
-        def tagged(d: DataFrame, tp: String) = d
-          .withColumn(ChangeTypeCol, lit(tp))
-          .withColumn(CommitVersionCol, lit(v))
-        ins.map(tagged(_, "insert")).toSeq ++
-          (del.toSeq ++ tombEvents).map(tagged(_, "delete"))
+        rewriteEvents ++ tombEvents.map(tagged(_, "delete"))
       }
     }
     // the empty full-schema shell anchors the output schema: EVERY
@@ -2049,7 +2095,11 @@ object Versioned {
     * turns a single-key update from a full-table rewrite into a scan
     * plus a handful of file rewrites, which is Iceberg's copy-on-write
     * MERGE cost model. Returns None when nothing matches (caller
-    * decides: append or no-op). */
+    * decides: append or no-op). A caller that already located the
+    * touched files as a by-product of its own pass over the snapshot
+    * ([[mergeInto]]'s fused cardinality probe) passes them as
+    * `touchedAt` = (version probed, table-relative paths) and the
+    * provenance scan is skipped; `matches` is then unused. */
   private def mergeFiles(spark: SparkSession, tableDir: String,
       matches: DataFrame => DataFrame,
       rewrite: DataFrame => DataFrame,
@@ -2058,27 +2108,14 @@ object Versioned {
       pruneRange: Option[(String, Any, Any)] = None,
       transform: Option[Transform] = None,
       note: Option[String] = None,
-      deleteDf: Option[DataFrame] = None): Option[Int] = {
+      deleteDf: Option[DataFrame] = None,
+      touchedAt: Option[(Int, Set[String])] = None): Option[Int] = {
     val f = fs(spark, tableDir)
-    val v = currentVersion(spark, tableDir)
     val root = qualifiedRoot(f, tableDir)
-    // The provenance scan that locates touched files reads the whole
-    // snapshot by default; with a key range and a `_stats` sidecar it
-    // reads only the files whose (min, max) intersect the range —
-    // manifest-level pruning makes a narrow upsert's discovery cost
-    // O(candidate files), not O(table). Sound because a pruned-away
-    // file provably contains no row in the range, hence no match.
-    val probe = pruneRange match {
-      case Some((c, lo, hi)) => readWhereAllImpl(spark, tableDir,
-        Seq((c, lo, hi)), Nil, Some(v), withDeletes = false)
-      case None => readSnapshot(spark, tableDir, Some(v),
-        withDeletes = false)
+    val (v, touched) = touchedAt.getOrElse {
+      val v = currentVersion(spark, tableDir)
+      (v, provenance(spark, tableDir, v, root, matches, pruneRange))
     }
-    // collect is metadata-scale: one row per TOUCHED FILE
-    val touched = matches(probe.withColumn("__file", input_file_name()))
-      .select("__file").distinct().collect()
-      .map(r => decodePath(r.getString(0)).stripPrefix(root + "/"))
-      .toSet
     if (touched.isEmpty) return None
     // data entries split into untouched (linked) and touched-survivor
     // files; tombstone lines link through unchanged — they still apply
@@ -2111,6 +2148,29 @@ object Versioned {
       ownDirInManifest = true,
       transform = transform,
       dropOwnDirIfEmpty = true))
+  }
+
+  /** [[mergeFiles]]' provenance scan: the table-relative files of
+    * snapshot `v` holding a row `matches` keeps. It reads the whole
+    * snapshot by default; with a key range and a `_stats` sidecar it
+    * reads only the files whose (min, max) intersect the range —
+    * manifest-level pruning makes a narrow upsert's discovery cost
+    * O(candidate files), not O(table). Sound because a pruned-away
+    * file provably contains no row in the range, hence no match. */
+  private def provenance(spark: SparkSession, tableDir: String, v: Int,
+      root: String, matches: DataFrame => DataFrame,
+      pruneRange: Option[(String, Any, Any)]): Set[String] = {
+    val probe = pruneRange match {
+      case Some((c, lo, hi)) => readWhereAllImpl(spark, tableDir,
+        Seq((c, lo, hi)), Nil, Some(v), withDeletes = false)
+      case None => readSnapshot(spark, tableDir, Some(v),
+        withDeletes = false)
+    }
+    // collect is metadata-scale: one row per TOUCHED FILE
+    matches(probe.withColumn("__file", input_file_name()))
+      .select("__file").distinct().collect()
+      .map(r => decodePath(r.getString(0)).stripPrefix(root + "/"))
+      .toSet
   }
 
   /** Row-level MERGE (upsert) by key: rows of the current snapshot
@@ -2325,8 +2385,13 @@ object Versioned {
     * Iceberg/Delta cardinality contract is enforced up front: a target
     * row matched by MORE than one source row fails the merge (its
     * update would be nondeterministic) — checked by grouping the
-    * matched provenance scan on exact (file, row-ordinal) coordinates,
-    * never a guess. Source rows may match many target rows freely.
+    * matched scan on exact (file, row-ordinal) coordinates, never a
+    * guess. Without NOT MATCHED BY SOURCE clauses that check and the
+    * provenance scan are ONE pass over target ⋈ source: the per-row
+    * match counts roll up to each file's maximum, a maximum above 1
+    * refuses, and the files collected are exactly the touched set
+    * (files holding a LIVE matched row). Source rows may match many
+    * target rows freely.
     * Update/insert values cast to the column's existing type; clause
     * and join conditions see NULL as false. A merge where nothing
     * matches any clause is a no-op returning the current version. */
@@ -2372,16 +2437,34 @@ object Versioned {
       lit(false))
     try {
       // —— cardinality contract (only matched clauses can trip it) ——
-      if (matched.nonEmpty) {
+      // grouping the matched scan on exact (file, row-ordinal) counts
+      // each target row's source matches; rolled up per file, the
+      // same pass also names the files holding a matched row. Without
+      // NOT MATCHED BY SOURCE clauses those ARE the touched files, so
+      // the one collect serves the check and the provenance probe
+      val fused: Option[Set[String]] = if (matched.isEmpty) None else {
         val t = readSnapshot(spark, tableDir, Some(cur),
           withDeletes = true, withMeta = true).alias("__t")
-        val multi = t.join(src, on, "inner")
+        val perRow = t.join(src, on, "inner")
           .groupBy(col(MetaFileCol), col(MetaPosCol))
-          .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
-        require(multi.isEmpty, "MERGE cardinality violation: a target " +
-          "row matched more than one source row (the update/delete " +
-          "would be nondeterministic) — deduplicate the source on the " +
-          "merge keys first")
+          .agg(count(lit(1)).as("__n"))
+        def refuse(multi: Boolean): Unit = require(!multi,
+          "MERGE cardinality violation: a target row matched more " +
+            "than one source row (the update/delete would be " +
+            "nondeterministic) — deduplicate the source on the merge " +
+            "keys first")
+        if (notMatchedBySource.nonEmpty) {
+          refuse(!perRow.filter(col("__n") > 1).isEmpty)
+          None
+        } else {
+          // metadata-scale: one row per file holding a matched row
+          val perFile = perRow.groupBy(col(MetaFileCol))
+            .agg(max(col("__n")).as("__m")).collect()
+          refuse(perFile.exists(_.getLong(1) > 1))
+          val root = qualifiedRoot(fs(spark, tableDir), tableDir)
+          Some(perFile.map(r => decodePath(r.getString(0))
+            .stripPrefix(root + "/")).toSet)
+        }
       }
       // —— which target rows are affected → which files rewrite ——
       val anyNmbs = notMatchedBySource.map(c => cond(c.condition))
@@ -2485,7 +2568,7 @@ object Versioned {
           .filter(t => schema.fieldNames.contains(t.source))
         mergeFiles(spark, tableDir, touches, rewriteAll,
           partitionCol = None, statsCols = Nil, note = note,
-          transform = tspec) match {
+          transform = tspec, touchedAt = fused.map(cur -> _)) match {
           case Some(v) => v
           case None => inserts match {
             // no file touched: a pure-insert merge appends O(delta)
@@ -5697,15 +5780,24 @@ object Versioned {
     * `\N` = null) as strings next to their catalog type and cast back
     * for pruning comparisons (timestamps as TZ-independent epoch
     * micros, see [[statsRoundTrips]]). */
-  /** The stage's freshly written DATA files (absolute path strings);
-    * sidecar/tombstone dirs are not data. */
+  /** The stage's freshly written DATA files (absolute path strings).
+    * Everything under the stage's `_stats`, `_deletes` and
+    * `_posdeletes` subtrees is not data, matched by stage-relative
+    * prefix, and neither is any path with a `_temporary` segment: the
+    * tombstone writes run concurrently with the stats harvest and the
+    * emptiness probe that list the stage ([[commitStaged]]), and their
+    * in-flight part files sit under `_deletes/_temporary/…/attempt_*`,
+    * where a parent-name test cannot see the tombstone dir. The walk
+    * never descends into those subtrees. */
   private def stagedDataFiles(f: FileSystem, stage: Path): Seq[String] =
-    FsFast.walkFiles(f, stage).collect {
-      case e if e.name.endsWith(".parquet") &&
-        e.parentName != StatsDir &&
-        e.parentName != DeletesDir &&
-        e.parentName != PosDeletesDir => e.path.toString
+    FsFast.walkFiles(f, stage, skipDir = rel => {
+      val segs = rel.split("/")
+      NonDataStageDirs.contains(segs.head) || segs.contains("_temporary")
+    }).collect {
+      case e if e.name.endsWith(".parquet") => e.path.toString
     }
+
+  private val NonDataStageDirs = Set(StatsDir, DeletesDir, PosDeletesDir)
 
   private def writeStats(spark: SparkSession, f: FileSystem,
       stage: Path, statsCols: Seq[String]): Unit = {

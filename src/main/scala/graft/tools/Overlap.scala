@@ -23,4 +23,19 @@ object Overlap {
         throw e.getCause
     } finally pool.shutdown()
   }
+
+  /** Two legs of different result types, overlapped like
+    * [[concurrently]]. */
+  def concurrently2[A, B](a: () => A, b: () => B): (A, B) = {
+    val Seq(x, y) = concurrently[Any](a, b)
+    (x.asInstanceOf[A], y.asInstanceOf[B])
+  }
+
+  /** Three legs of different result types, overlapped like
+    * [[concurrently]]. */
+  def concurrently3[A, B, C](a: () => A, b: () => B, c: () => C)
+      : (A, B, C) = {
+    val Seq(x, y, z) = concurrently[Any](a, b, c)
+    (x.asInstanceOf[A], y.asInstanceOf[B], z.asInstanceOf[C])
+  }
 }

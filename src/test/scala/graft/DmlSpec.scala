@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.Versioned
 
@@ -407,5 +408,63 @@ class DmlSpec extends SparkSpec {
       spark.sql("DELETE FROM plain_region WHERE r_regionkey = 0")
     }
     assert(Versioned.currentVersion(spark, t) == 1)
+  }
+
+  test("fused MERGE probe: rewrites the provenance scan's file set, " +
+      "refuses cardinality violations; NMBS merges keep their path") {
+    import spark.implicits._
+    val (t, _) = fresh("merge_fused")
+    // three files: ids 1-3, 4-6, 7-9
+    Versioned.commit(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v")
+      .coalesce(1), t)
+    Versioned.append(Seq((4, "d"), (5, "e"), (6, "f")).toDF("id", "v")
+      .coalesce(1), t)
+    Versioned.append(Seq((7, "g"), (8, "h"), (9, "i")).toDF("id", "v")
+      .coalesce(1), t)
+    def name(p: String) = p.split("/").last
+    def merge(src: DataFrame,
+        nmbs: Seq[Versioned.MergeClause] = Nil): Int =
+      Versioned.mergeInto(spark, t, src,
+        on = col("__t.id") === col("__s.id"),
+        matched = Seq(Versioned.MergeUpdate(None,
+          Seq("v" -> col("__s.v")))),
+        notMatched = Seq(Versioned.MergeInsert(None,
+          Seq("id" -> col("__s.id"), "v" -> col("__s.v")))),
+        notMatchedBySource = nmbs)
+    // the provenance scan's answer, computed the old way: the files
+    // holding a target row the source matches
+    val src = Seq((2, "B"), (8, "H"), (20, "new")).toDF("id", "v")
+    val provenance = Versioned.read(spark, t)
+      .withColumn("f", input_file_name())
+      .join(src.select("id"), "id").select("f").distinct().collect()
+      .map(r => name(r.getString(0))).toSet
+    assert(provenance.size == 2)
+    assert(merge(src) == 4)
+    val rewritten = Versioned.entries(spark, t)
+      .filter(col("status") === "deleted").select("file").collect()
+      .map(r => name(r.getString(0))).toSet
+    assert(rewritten == provenance)
+    assert(Versioned.read(spark, t).orderBy("id").collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq == Seq(
+        (1, "a"), (2, "B"), (3, "c"), (4, "d"), (5, "e"), (6, "f"),
+        (7, "g"), (8, "H"), (9, "i"), (20, "new")))
+    // two source rows on target id 5 (plus a clean match elsewhere):
+    // the fused pass refuses, nothing publishes
+    val dup = Seq((5, "x"), (5, "y"), (1, "z")).toDF("id", "v")
+    val e = intercept[IllegalArgumentException](merge(dup))
+    assert(e.getMessage.contains("cardinality"))
+    // with a NOT MATCHED BY SOURCE clause the check runs on its own
+    // pass, and refuses the same way
+    val e2 = intercept[IllegalArgumentException](
+      merge(dup, Seq(Versioned.MergeDelete(None))))
+    assert(e2.getMessage.contains("cardinality"))
+    assert(Versioned.currentVersion(spark, t) == 4)
+    // matched + NMBS: the NMBS clause touches every file
+    assert(merge(Seq((1, "A")).toDF("id", "v"),
+      Seq(Versioned.MergeDelete(Some(col("__t.id") > 8)))) == 5)
+    assert(Versioned.read(spark, t).orderBy("id").collect()
+      .map(_.getInt(0)).toSeq == Seq(1, 2, 3, 4, 5, 6, 7, 8))
+    assert(Versioned.read(spark, t).filter(col("id") === 1)
+      .head().getString(1) == "A")
   }
 }

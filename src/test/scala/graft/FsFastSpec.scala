@@ -85,6 +85,22 @@ class FsFastSpec extends SparkSpec {
       FsFast.walkFiles(f, new Path(dir, "nope")))
   }
 
+  test("walkFiles skipDir prunes subtrees by relative path on both arms") {
+    val (local, lf) = fresh("prune")
+    val (remote, rf, _) = freshRemote("prune_remote")
+    for ((dir, f) <- Seq((local, lf), (remote, rf))) {
+      Seq("a.parquet", "p=1/b.parquet", "_deletes/c.parquet",
+          "_deletes/_temporary/0/d.parquet", "p=1/_temporary/e.parquet",
+          "q/_deletes/f.parquet")
+        .foreach(r => FsFast.put(f, new Path(dir, r), "x".getBytes, false))
+      val kept = FsFast.walkFiles(f, dir, skipDir = rel =>
+          rel == "_deletes" || rel.split("/").contains("_temporary"))
+        .map(_.name).toSet
+      // only a TOP-level `_deletes` is pruned; a nested one is data
+      assert(kept == Set("a.parquet", "b.parquet", "f.parquet"), dir)
+    }
+  }
+
   test("footerRowCount reads the parquet footer exactly") {
     import spark.implicits._
     val (dir, f) = fresh("footer")

@@ -69,4 +69,32 @@ class RelationalSpec extends SparkSpec {
       .executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"))
   }
+
+  test("selectPercentilesMulti casts mixed value types to a common one") {
+    import spark.implicits._
+    val df = Seq(("a", 1, 1.5), ("a", 2, 2.5), ("a", 3, 10.0),
+      ("a", 4, 0.5), ("b", 10, 3.0), ("b", 20, 1.0)).toDF("g", "i", "d")
+    val got = Relational.selectPercentilesMulti(df, "g", Seq(
+        "i" -> Seq((0.5, "i_med")),
+        "d" -> Seq((0.5, "d_med"), (0.9, "d_p90"))))
+      .orderBy("g").collect()
+      .map(r => (r.getString(0), r.getAs[Double]("i_med"),
+        r.getAs[Double]("d_med"), r.getAs[Double]("d_p90"))).toSeq
+    // Spark's exact interpolating percentile is the oracle
+    val want = df.groupBy("g").agg(
+        expr("percentile(i, 0.5)"), expr("percentile(d, 0.5)"),
+        expr("percentile(d, 0.9)"))
+      .orderBy("g").collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2),
+        r.getDouble(3))).toSeq
+    assert(got.map(_._1) == want.map(_._1))
+    got.zip(want).foreach { case (a, b) =>
+      assert(math.abs(a._2 - b._2) < 1e-9 &&
+        math.abs(a._3 - b._3) < 1e-9 && math.abs(a._4 - b._4) < 1e-9,
+        s"$a vs $b")
+    }
+    // group a: int median 2.5, double median 2.0, p90 2.5 + 0.7 * 7.5
+    assert(got.head._1 == "a" && got.head._2 == 2.5 &&
+      got.head._3 == 2.0 && math.abs(got.head._4 - 7.75) < 1e-9)
+  }
 }
